@@ -71,76 +71,76 @@ def cmd_history_load(args) -> int:
     return 0
 
 
+def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The warehouse table at ``path``; None only when it was never
+    written. Any other read error must surface: taking it for a cold
+    start would re-append every key."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return None
+    return spark.read.parquet(path)
+
+
+def _append_delta(delta: DataFrame, write) -> int:
+    """Evaluate ``delta`` once, ``write`` it unless empty; returns its
+    row count."""
+    delta = delta.localCheckpoint()
+    n = delta.count()
+    if n:
+        write(delta)
+    return n
+
+
 def cmd_daily_load(args) -> int:
     """Incremental load: watermark resume → bounded source scan →
-    insert-if-absent merge → rewrite touched partitions (reference
-    etl/daily_load/violation_etl_daily.py lambda_handler). Replay-safe:
-    re-running inserts nothing."""
+    insert-if-absent against the watermark day's rows → append the new
+    rows (reference etl/daily_load/violation_etl_daily.py and
+    weather_etl_daily.py lambda_handler). Only ``history-load``
+    overwrites; a daily load writes just the day's new rows. Replay-safe:
+    re-running inserts nothing, and completes a one-day load that was
+    cut short."""
     from . import catalog
-    from .operators.incremental import get_watermark, incremental_merge
+    from .operators.incremental import incremental_delta
     from .operators.sinks import write_partitioned
 
     spark = _spark()
-    source = catalog.violations(spark, args.sf_dir)
-    try:
-        existing = spark.read.parquet(f"{args.warehouse}/violations")
-        cold = False
-    except Exception:
-        existing = source.limit(0)
-        cold = True
+    # the delta reads each source once (the violations twice without
+    # --as-of): a cache would only add its build to the load
+    source = catalog.violations(spark, args.sf_dir, materialized=False)
     today = (
         dt.date.fromisoformat(args.as_of)
         if args.as_of
         else (source.agg(F.max("violation_date")).collect()[0][0]
               + dt.timedelta(days=1))
     )
-    wm_before = None if cold else get_watermark(existing, "violation_date")
-    merged = incremental_merge(
-        existing,
-        source,
-        date_col="violation_date",
-        key_cols=["violation_id"],
-        cold_start_default=dt.date(1900, 1, 1),
-        today=today,
+    cold_start = dt.date(1900, 1, 1)
+
+    v_path = f"{args.warehouse}/violations"
+    v_existing = _read_table(spark, v_path)
+    delta, wm_before = incremental_delta(
+        v_existing, source, "violation_date", ["violation_id"],
+        cold_start, today,
     )
-    n_before = existing.count()
-    n_after = merged.count()
-    if n_after != n_before:
-        write_partitioned(merged, f"{args.warehouse}/violations", "month")
+    n_before = v_existing.count() if v_existing is not None else 0
+    inserted = _append_delta(
+        delta, lambda d: write_partitioned(d, v_path, "month", mode="append")
+    )
 
-    # weather twin (reference weather_etl_daily.lambda_handler):
-    # last-writer-wins upsert keyed on weather_date
-    from .operators.sinks import upsert_last_writer_wins
-
-    w_src = catalog.weather_daily(spark, args.sf_dir)
-    try:
-        w_existing = spark.read.parquet(f"{args.warehouse}/weather_daily")
-    except Exception:
-        w_existing = w_src.limit(0)
-    w_before = w_existing.count()
-    w_merged = upsert_last_writer_wins(w_existing, w_src, ["weather_date"])
-    w_after = w_merged.count()
-    if w_after != w_before:
-        # two-phase rewrite: the merge reads the current table, so the
-        # new version lands in a scratch dir first (overwriting a path
-        # that is also an input is rejected by Spark)
-        import shutil
-
-        w_merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{args.warehouse}/weather_daily_next"
-        )
-        next_df = spark.read.parquet(f"{args.warehouse}/weather_daily_next")
-        next_df.coalesce(1).write.mode("overwrite").parquet(
-            f"{args.warehouse}/weather_daily"
-        )
-        shutil.rmtree(
-            f"{args.warehouse}/weather_daily_next", ignore_errors=True
-        )
+    # weather twin (reference weather_etl_daily.lambda_handler): the same
+    # watermark bound, keyed on the date (weather_etl_daily.py:59-83)
+    w_path = f"{args.warehouse}/weather_daily"
+    w_delta, _ = incremental_delta(
+        _read_table(spark, w_path), catalog.weather_daily(spark, args.sf_dir, materialized=False),
+        "weather_date", ["weather_date"], cold_start, today,
+    )
+    w_inserted = _append_delta(
+        w_delta, lambda d: d.coalesce(1).write.mode("append").parquet(w_path),
+    )
 
     print(
         f"daily-load complete: watermark_before={wm_before} "
-        f"as_of={today} inserted={n_after - n_before} total={n_after} "
-        f"weather_upserted={w_after - w_before}"
+        f"as_of={today} inserted={inserted} total={n_before + inserted} "
+        f"weather_upserted={w_inserted}"
     )
     return 0
 

@@ -8,8 +8,8 @@ Reference behavior re-expressed:
   (reference violation_etl_daily.py:139-141)
 - J3 cold-start default when the table is empty
   (reference violation_etl_daily.py:129-133)
-- J5 idempotent replay via the insert-if-absent sink
-  (reference DEPLOYMENT.md:244-250)
+- J5 idempotent replay: the batch is only the rows whose key is absent
+  (insert-if-absent, reference DEPLOYMENT.md:244-250), appended
 
 Batch-first (matching the reference's daily cadence); the Structured
 Streaming variant with ``availableNow`` lives in ``streaming/daily.py``.
@@ -22,7 +22,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sinks import insert_if_absent
+from .sinks import dedupe_by_key, insert_delta
 
 
 def get_watermark(existing: DataFrame, date_col: str) -> dt.date | None:
@@ -48,6 +48,51 @@ def incremental_range(
     return start, end
 
 
+def incremental_delta(
+    existing: DataFrame | None,
+    source: DataFrame,
+    date_col: str,
+    key_cols: list[str],
+    cold_start_default: dt.date,
+    today: dt.date,
+) -> tuple[DataFrame, dt.date | None]:
+    """One incremental batch as the rows to APPEND, plus the watermark
+    they were computed from: the deduped source rows in
+    ``[watermark | cold-start default, yesterday]`` whose key is absent
+    from the existing rows of the watermark day (null-safe
+    first-writer-wins, the reference's ``INSERT IGNORE``,
+    violation_etl_daily.py:288-306). ``existing=None`` is an empty table.
+
+    The date predicate is pushed down to the source scan by Catalyst (the
+    engine analog of the reference's server-side ``where=ISSUE_DATE >= ms
+    AND < ms``, violation_etl_daily.py:168), and the anti-join reads one
+    day of existing rows, so a batch costs O(delta), not O(table).
+
+    Exactness precondition: a key never appears under two dates, so only
+    rows of the watermark day can hold a key of the range. The violations
+    key holds by construction — ``violation_id`` embeds the issue date's
+    ``yyyyMMdd`` (etl/violations.py) — and the weather key IS the date.
+
+    Replay-safe: appending the delta never changes an existing row, and
+    the range re-opens the watermark day, so a re-run restores whatever
+    an interrupted append left missing from its last loaded day. That
+    covers any interrupted one-day load (the daily cadence). An append
+    of several days cut short during its job commit can leave an earlier
+    day partly written below the new watermark, which no re-run restores.
+    """
+    wm = None if existing is None else get_watermark(existing, date_col)
+    # the reference's range with the watermark day re-opened
+    resume = None if wm is None else wm - dt.timedelta(days=1)
+    rng = incremental_range(resume, cold_start_default, today)
+    if rng is None:
+        return source.limit(0), wm
+    start, end = rng
+    fresh = source.where(F.col(date_col).between(start, end))
+    if existing is None:
+        return dedupe_by_key(fresh, key_cols), wm
+    return insert_delta(existing.where(F.col(date_col) == F.lit(wm)), fresh, key_cols), wm
+
+
 def incremental_merge(
     existing: DataFrame,
     source: DataFrame,
@@ -56,20 +101,10 @@ def incremental_merge(
     cold_start_default: dt.date,
     today: dt.date,
 ) -> DataFrame:
-    """One incremental batch: watermark → bounded source scan → idempotent
-    merge. The date predicate is pushed down to the source scan by
-    Catalyst (the engine analog of the reference's server-side
-    ``where=ISSUE_DATE >= ms AND < ms``, violation_etl_daily.py:168).
-
-    Replay-safe: running the same batch twice is a no-op because the
-    sink is insert-if-absent on the PK.
-    """
-    wm = get_watermark(existing, date_col)
-    rng = incremental_range(wm, cold_start_default, today)
-    if rng is None:
-        return existing
-    start, end = rng
-    fresh = source.where(
-        (F.col(date_col) >= F.lit(start)) & (F.col(date_col) <= F.lit(end))
+    """The table after one incremental batch: ``existing`` plus its
+    ``incremental_delta``. Replay-safe: merging the same batch twice is a
+    fixpoint."""
+    delta, _ = incremental_delta(
+        existing, source, date_col, key_cols, cold_start_default, today
     )
-    return insert_if_absent(existing, fresh, key_cols)
+    return existing.unionByName(delta)

@@ -23,10 +23,11 @@ Scale posture:
   day of data vs the full table).
 - ``upsert_last_writer_wins`` is a per-key window over the union — the
   shuffle partitions by PK only, and with daily batches the union's
-  incoming side is tiny. For repeated merges, writing the table
-  partitioned by ``month`` (see ``write_partitioned``) confines the
-  rewrite to the touched partitions (dynamic partition overwrite), the
-  parquet analog of MySQL updating only the affected rows.
+  incoming side is tiny.
+- Daily loads never rewrite the table: they append ``insert_delta``'s
+  new rows (``incremental.incremental_delta``), which only add files
+  under the delta's ``month`` partitions; ``history-load`` alone
+  overwrites (see ``write_partitioned``).
 """
 
 from __future__ import annotations
@@ -59,12 +60,17 @@ def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: Sequence[st
     intra-batch duplicates keep one deterministic representative.
     Idempotent for NULL key values too (null-safe anti-join).
     """
+    return existing.unionByName(insert_delta(existing, incoming, keys))
+
+
+def insert_delta(existing: DataFrame, incoming: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The rows ``insert_if_absent`` adds: the deduped incoming rows
+    whose key is absent from existing — what an append-only sink writes."""
     incoming = dedupe_by_key(incoming, keys)
     ex_keys = existing.select(*keys).distinct()
-    fresh = incoming.join(
+    return incoming.join(
         ex_keys, _keys_match(incoming, ex_keys, keys), "left_anti"
     )
-    return existing.unionByName(fresh)
 
 
 def _keep_one(df: DataFrame, keys: Sequence[str], rep: "F.Column", out_cols: Sequence[str]) -> DataFrame:
@@ -150,9 +156,10 @@ def write_partitioned(
     """Partitioned-parquet table layout (the engine analog of the
     reference's month→MapServer-layer routing table,
     reference etl/daily_load/violation_etl_daily.py:21-41): queries with
-    a ``month`` predicate prune partitions at planning time, and
-    incremental merges rewrite only touched months via dynamic partition
-    overwrite."""
+    a ``month`` predicate prune partitions at planning time. The
+    history load overwrites (dynamic partition overwrite replaces only
+    the months ``df`` holds); daily loads pass ``mode="append"`` and add
+    files only under the delta's months."""
     (
         df.write.mode(mode)
         .option("partitionOverwriteMode", "dynamic")

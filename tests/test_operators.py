@@ -40,6 +40,16 @@ def test_violation_id_is_unique(spark, sf_dir):
     assert n == k
 
 
+def test_violation_id_embeds_its_violation_date(spark, sf_dir):
+    """The precondition that makes ``incremental_delta``'s range-restricted
+    anti-join exact: a key's trailing ``yyyyMMdd`` is its own date, so no
+    key can recur under another date."""
+    v = catalog.violations(spark, sf_dir)
+    embedded = F.substring_index("violation_id", "_", -1)
+    bad = v.where(~embedded.eqNullSafe(F.date_format("violation_date", "yyyyMMdd")))
+    assert v.count() > 0 and bad.count() == 0
+
+
 def test_insert_if_absent_first_writer_wins_and_idempotent(spark, sf_dir):
     _, existing, incoming = _split(spark, sf_dir)
     merged = insert_if_absent(existing, incoming, ["violation_id"])
